@@ -664,7 +664,7 @@ object Bench {
       advisArr("cold_contaminated", coldContam) +
       advisArr("steady_over_cold", steadyOverCold)
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results)}$steadyJson,"failed":$failed,"regressions":$regJson$advisJson$assertSummary,"parse_mbps":$parseMbps,"parse_mbps_best":$parseMbpsBest,"parse_spread":$parseSpread,"contaminated":$contaminated$envJson$memJson$buildJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results)}$steadyJson,"failed":$failed,"regressions":$regJson$advisJson$assertSummary,"parse_mbps":$parseMbps,"parse_mbps_best":$parseMbpsBest,"parse_spread":$parseSpread,"contaminated":$contaminated$envJson$memJson$buildJson,"cpus":$cpus,"sf":"$sfDir"}"""
     // full runs only: a SPARK_GRAFT_QUERIES spot run must not clobber the
     // committed full-catalog artifact. SPARK_GRAFT_DETAIL redirects the
     // full map elsewhere (rehearsal sweeps record per-query factors

@@ -30,6 +30,11 @@ import graft.operators.Dedup
   */
 private[graft] object MinhashCheck {
 
+  /** The exact-Jaccard bar: strong pairs the sketch must recover, and the
+    * full-set re-verification that separates divergent from genuine misses.
+    */
+  val JaccardBar = 0.8
+
   final case class Result(
       nSampled: Long, exact: Set[(Long, Long)], banded: Set[(Long, Long)],
       exactSecs: Double, bandedSecs: Double,
@@ -48,7 +53,11 @@ private[graft] object MinhashCheck {
       * re-verification is what PROVES a miss genuine.)
       */
     def divergent: Set[(Long, Long)] =
-      missed.filter(p => fullSetJ.getOrElse(p, 1.0) < 0.8)
+      missed.filter(p => fullSetJ.get(p).exists(_ < JaccardBar))
+    /** Misses with a doc id absent from the re-read corpus: nothing
+      * proves them divergent, so they count as genuine.
+      */
+    def idNotFound: Set[(Long, Long)] = missed.filterNot(fullSetJ.contains)
     /** Misses at full-set j ≥ 0.8 — real sketch recall failures,
       * bounded by a quantitative floor instead of missed=0, which is
       * unattainable for a probabilistic sketch at corpus scale.
@@ -78,9 +87,10 @@ private[graft] object MinhashCheck {
       */
     def pass: Boolean = exact.nonEmpty && recallGenuine >= 0.9999
     def detail: String =
-      s"exact(j>=0.8)=${exact.size} minhash=${banded.size} " +
+      s"exact(j>=$JaccardBar)=${exact.size} minhash=${banded.size} " +
         s"missed=${missed.size} missed_divergent_universe=${divergent.size} " +
         s"missed_genuine=${genuine.size} " +
+        s"missed_genuine_id_not_found=${idNotFound.size} " +
         f"recall_genuine=$recallGenuine%.6f sampled_docs=$nSampled"
   }
 
@@ -89,7 +99,9 @@ private[graft] object MinhashCheck {
 
   /** Full-shingle-set jaccard for a handful of (id, id) pairs — the
     * per-missed-pair re-verification (driver-side over collected
-    * shingle sets; |missed| is tiny by construction).
+    * shingle sets; |missed| is tiny by construction). A pair with an id
+    * that is not found is left out of the map, not scored as an empty
+    * set: an unverifiable miss must not pass as a divergent one.
     */
   private def fullSetJaccard(spark: SparkSession, sfDir: String,
       pairs: Set[(Long, Long)]): Map[(Long, Long), Double] = {
@@ -103,9 +115,9 @@ private[graft] object MinhashCheck {
           .as("__sh"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
-    pairs.iterator.map { case p @ (a, b) =>
-      val (sa, sb) = (sets.getOrElse(a, Set.empty),
-        sets.getOrElse(b, Set.empty))
+    pairs.iterator.collect { case p @ (a, b)
+        if sets.contains(a) && sets.contains(b) =>
+      val (sa, sb) = (sets(a), sets(b))
       val inter = sa.intersect(sb).size
       val uni = sa.size + sb.size - inter
       p -> (if (uni == 0) 0.0 else inter.toDouble / uni)
@@ -122,7 +134,7 @@ private[graft] object MinhashCheck {
     def inSample(id: Long): Boolean =
       everyKthFamily <= 1L || (id % 100000000L) % everyKthFamily == 0L
     val t0 = System.nanoTime()
-    val exact = Dedup.jaccardPairs(sampled, "doc_id", "text", 0.8)
+    val exact = Dedup.jaccardPairs(sampled, "doc_id", "text", JaccardBar)
       .select(col("id_a"), col("id_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exactSecs = (System.nanoTime() - t0) / 1e9

@@ -307,7 +307,9 @@ object Queries {
 
   // ------------------------------------------------------------------ stats
 
-  /** per-column stats profile in ONE aggregation pass (reference stats.ts). */
+  /** per-column stats profile (reference stats.ts): one unpivot shuffle of
+    * distinct (column, value) pairs, then one global aggregate.
+    */
   def q24_stats_profile(s: SparkSession, dir: String): DataFrame =
     Stats.profile(t(s, dir, "orders")).orderBy(col("col_name"))
 

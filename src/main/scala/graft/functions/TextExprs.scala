@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
@@ -518,6 +519,116 @@ object TextExprs {
       copy(child = newChild)
   }
 
+  /** Class bits of [[csv_value_class]]: the value is present (non-null,
+    * non-empty), is not a boolean literal, is not a numeric literal.
+    */
+  final val CsvPresent = 1
+  final val CsvNotBool = 2
+  final val CsvNotNum = 4
+
+  /** The 3-bit class mask of one CSV field, bit-identical to the Column
+    * rules of dynamicTyping (reference row.ts:442-458):
+    *  - present = `v IS NOT NULL AND v != ''`;
+    *  - not-boolean = present AND NOT `lower(v) IN ('true', 'false')`;
+    *  - not-numeric = present AND NOT
+    *    `v RLIKE '^-?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$'`.
+    * One byte scan, no regex and no lowered copy. Exact-parity notes:
+    *  - no non-ASCII codepoint lowercases onto a letter of "true" or
+    *    "false" (U+017F 'ſ' does so only under `equalsIgnoreCase`, not
+    *    `lower`), so a boolean is 4 or 5 ASCII bytes lowered over A-Z;
+    *  - Java's `\d` is ASCII-only, and the numeric grammar has one
+    *    greedy parse: a failed exponent leaves an 'e' that `$` rejects;
+    *  - Java's `$` also matches before ONE line terminator ending the
+    *    input: `\n`, `\r`, `\r\n`, U+0085, U+2028 or U+2029.
+    */
+  def csvValueClass(s: UTF8String): Int = {
+    if (s == null || s.numBytes == 0) return 0
+    var mask = CsvPresent
+    if (!isBoolLiteral(s)) mask |= CsvNotBool
+    if (!isNumLiteral(s)) mask |= CsvNotNum
+    mask
+  }
+
+  private val TrueBytes = "true".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val FalseBytes = "false".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  private def isBoolLiteral(s: UTF8String): Boolean = {
+    val n = s.numBytes
+    val w = if (n == 4) TrueBytes else if (n == 5) FalseBytes else null
+    if (w == null) return false
+    var k = 0
+    while (k < n) {
+      var c = s.getByte(k)
+      if (c >= 'A' && c <= 'Z') c = (c + 32).toByte
+      if (c != w(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  @inline private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
+
+  private def isNumLiteral(s: UTF8String): Boolean = {
+    val n = s.numBytes
+    var i = if (s.getByte(0) == '-') 1 else 0
+    val intStart = i
+    while (i < n && isDigit(s.getByte(i))) i += 1
+    val nInt = i - intStart
+    var nFrac = 0
+    if (i < n && s.getByte(i) == '.') {
+      i += 1
+      val fracStart = i
+      while (i < n && isDigit(s.getByte(i))) i += 1
+      nFrac = i - fracStart
+    }
+    if (nInt == 0 && nFrac == 0) return false
+    if (i < n && (s.getByte(i) == 'e' || s.getByte(i) == 'E')) {
+      var j = i + 1
+      if (j < n && (s.getByte(j) == '+' || s.getByte(j) == '-')) j += 1
+      val expStart = j
+      while (j < n && isDigit(s.getByte(j))) j += 1
+      if (j > expStart) i = j
+    }
+    // `$`: end of input, or one final line terminator
+    (n - i) match {
+      case 0 => true
+      case 1 => s.getByte(i) == '\n' || s.getByte(i) == '\r'
+      case 2 =>
+        (s.getByte(i) == '\r' && s.getByte(i + 1) == '\n') ||
+          (s.getByte(i) == 0xc2.toByte && s.getByte(i + 1) == 0x85.toByte)
+      case 3 =>
+        s.getByte(i) == 0xe2.toByte && s.getByte(i + 1) == 0x80.toByte &&
+          (s.getByte(i + 2) == 0xa8.toByte || s.getByte(i + 2) == 0xa9.toByte)
+      case _ => false
+    }
+  }
+
+  /** csv_value_class(string) → int, [[csvValueClass]] per value; NULL
+    * maps to 0 (absent), so the result is never null.
+    */
+  case class CsvValueClass(child: Expression) extends UnaryExpression {
+    override def prettyName: String = "csv_value_class"
+    override def dataType: DataType = IntegerType
+    override def nullable: Boolean = false
+
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+      csvValueClass(child.eval(input).asInstanceOf[UTF8String])
+
+    override protected def doGenCode(ctx: CodegenContext,
+        ev: ExprCode): ExprCode = {
+      val c = child.genCode(ctx)
+      ev.copy(code =
+        code"""
+          ${c.code}
+          int ${ev.value} = ${c.isNull} ? 0 :
+            graft.functions.TextExprs.csvValueClass(${c.value});
+        """, isNull = FalseLiteral)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
   // once per session — see VectorExprs.registeredSessions for rationale
   private val registeredSessions = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
@@ -529,6 +640,8 @@ object TextExprs {
         "lang_marker_scores", exprs => LangMarkerScores(exprs.head), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "quality_score", exprs => QualityScore(exprs.head), "built-in")
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "csv_value_class", exprs => CsvValueClass(exprs.head), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "normalize_text", exprs => NormalizeText(exprs.head), "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -578,6 +691,11 @@ object TextExprs {
   def lang_marker_scores(loweredText: Column): Column = {
     ensureRegistered()
     call_function("lang_marker_scores", loweredText)
+  }
+
+  def csv_value_class(v: Column): Column = {
+    ensureRegistered()
+    call_function("csv_value_class", v.cast("string"))
   }
 
   def quality_score(text: Column): Column = {

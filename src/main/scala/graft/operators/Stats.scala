@@ -6,12 +6,6 @@ import org.apache.spark.sql.functions._
 /** Per-column profiling — the reference's `stats` CLI command
   * (reference: src/cli/commands/stats.ts:17-113): row count, null count
   * (null or empty string), distinct count, plus numeric min/max/mean.
-  *
-  * Scale: ONE aggregation pass over the table (all per-column aggregates in
-  * a single `agg`), then a constant-size `stack` unpivot of the 1-row
-  * result. Exact `countDistinct` is the reference behavior; `approx=true`
-  * swaps in HLL `approx_count_distinct` for the 100 TB path where an exact
-  * global distinct per column would shuffle every value.
   */
 object Stats {
 
@@ -23,23 +17,73 @@ object Stats {
   // reference profiled columns fully quoted
   private def qcol(c: String) = col(s"`${btick(c)}`")
 
-  def profile(df: DataFrame, approx: Boolean = false): DataFrame = {
-    val cols = df.columns
-    val aggs = cols.flatMap { c =>
-      val distinctAgg =
-        if (approx) approx_count_distinct(qcol(c)) else countDistinct(qcol(c))
-      Seq(
-        count(lit(1)).as(s"${c}__total"),
-        sum(when(qcol(c).isNull || qcol(c).cast("string") === "", 1)
-          .otherwise(0)).cast("long").as(s"${c}__nulls"),
-        distinctAgg.cast("long").as(s"${c}__distinct"))
+  /** One row per column, in column order: (col_name, n_total, n_nulls,
+    * n_distinct), where a null is NULL or a value whose string form is
+    * "" and n_distinct counts distinct non-NULL values.
+    *
+    * Exact (the reference behavior, the default): the table is unpivoted
+    * once into (column index, one value slot per distinct column type),
+    * so each value keeps its own type and groups under Spark's equality
+    * for it (-0.0 = 0.0, all NaNs equal, timestamps by instant). One
+    * map-side-combined `groupBy` of those pairs is the only hash shuffle
+    * (distinct pairs with their counts); one global aggregate over the
+    * pairs yields every column's counts, then a constant-size `stack`
+    * unpivots the 1-row result. Per-column `countDistinct`s in a single
+    * `agg` would instead plan an `Expand` that copies every row once per
+    * column and hashes it on a key as wide as the table.
+    *
+    * `approx=true` keeps all per-column aggregates in ONE aggregation
+    * pass with HLL `approx_count_distinct`, for the 100 TB path where an
+    * exact distinct per column would shuffle every distinct value.
+    */
+  def profile(df: DataFrame, approx: Boolean = false): DataFrame =
+    if (approx) profileApprox(df) else profileExact(df)
+
+  private def profileExact(df: DataFrame): DataFrame = {
+    val cols = df.columns.toSeq
+    val types = df.schema.fields.map(_.dataType).distinct
+    val slotOf = df.schema.fields.map(f => types.indexOf(f.dataType))
+    val slots = types.indices.map(k => s"__s$k")
+    val unpivoted = cols.indices.map { i =>
+      struct(lit(i).as("__i") +: types.indices.map { k =>
+        (if (k == slotOf(i)) qcol(cols(i)) else lit(null).cast(types(k)))
+          .as(slots(k))
+      }: _*)
     }
-    val onerow = df.agg(aggs.head, aggs.tail.toSeq: _*)
-    val stackArgs = cols
-      .map { c =>
-        val q = sqlQuote(c); val b = btick(c)
-        s"'$q', `${b}__total`, `${b}__nulls`, `${b}__distinct`"
-      }
+    val pairs = df.select(inline(array(unpivoted: _*)))
+      .groupBy(col("__i") +: slots.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+    val aggs = cols.indices.flatMap { i =>
+      val v = col(slots(slotOf(i)))
+      val mine = col("__i") === i
+      Seq(
+        coalesce(sum(when(mine, col("__n"))), lit(0L)).as(s"__total$i"),
+        sum(when(mine, when(v.isNull || v.cast("string") === "", col("__n"))
+          .otherwise(0L))).as(s"__nulls$i"),
+        count(when(mine && v.isNotNull, 1)).as(s"__distinct$i"))
+    }
+    stackCounts(pairs.agg(aggs.head, aggs.tail: _*), cols)
+  }
+
+  private def profileApprox(df: DataFrame): DataFrame = {
+    val cols = df.columns.toSeq
+    val aggs = cols.indices.flatMap { i =>
+      val v = qcol(cols(i))
+      Seq(
+        count(lit(1)).as(s"__total$i"),
+        sum(when(v.isNull || v.cast("string") === "", 1).otherwise(0))
+          .cast("long").as(s"__nulls$i"),
+        approx_count_distinct(v).cast("long").as(s"__distinct$i"))
+    }
+    stackCounts(df.agg(aggs.head, aggs.tail: _*), cols)
+  }
+
+  /** The 1-row `__total<i>, __nulls<i>, __distinct<i>` aggregate of
+    * [[profile]] as one row per column.
+    */
+  private def stackCounts(onerow: DataFrame, cols: Seq[String]): DataFrame = {
+    val stackArgs = cols.indices
+      .map(i => s"'${sqlQuote(cols(i))}', __total$i, __nulls$i, __distinct$i")
       .mkString(", ")
     onerow.selectExpr(
       s"stack(${cols.length}, $stackArgs) as (col_name, n_total, n_nulls, n_distinct)")

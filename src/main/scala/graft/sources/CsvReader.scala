@@ -752,33 +752,29 @@ object CsvReader {
 
   /** dynamicTyping: per-column inference with the reference's value rules
     * (row.ts:442-458) — all-boolean → boolean, all-numeric → double,
-    * else string. One aggregation pass over the scan. Empty strings
-    * (quoted "") coerce to NULL exactly like the reference's
-    * `value === "" → null` rule, so they never block a column's numeric/
-    * boolean inference.
+    * else string. One aggregation pass over the scan: the
+    * [[graft.functions.TextExprs.csv_value_class]] byte kernel classes
+    * each value into a 3-bit mask (present / not-boolean / not-numeric)
+    * and one `bit_or` per column folds the masks. Empty strings (quoted
+    * "") coerce to NULL exactly like the reference's `value === "" →
+    * null` rule, so they never block a column's numeric/boolean
+    * inference.
     */
   private def inferTypes(df: DataFrame, headers: Seq[String]): DataFrame = {
-    val numRe = "^-?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$"
-    val aggs = headers.flatMap { h =>
-      val v = col(h)
-      val present = v.isNotNull && v =!= ""
-      Seq(
-        max(when(present && !lower(v).isin("true", "false"), 1)
-          .otherwise(0)).as(s"${h}__notbool"),
-        max(when(present && !v.rlike(numRe), 1).otherwise(0))
-          .as(s"${h}__notnum"),
-        max(when(present, 1).otherwise(0)).as(s"${h}__any"))
-    }
-    val flags = df.agg(aggs.head, aggs.tail: _*).head()
-    val casts = headers.map { h =>
-      val notBool = flags.getAs[Int](s"${h}__notbool")
-      val notNum = flags.getAs[Int](s"${h}__notnum")
-      val any = flags.getAs[Int](s"${h}__any")
+    import graft.functions.TextExprs.{CsvNotBool, CsvNotNum, CsvPresent, csv_value_class}
+    val aggs = headers.map(h => bit_or(csv_value_class(col(h))))
+    val masks = df.agg(aggs.head, aggs.tail: _*).head()
+    val casts = headers.zipWithIndex.map { case (h, i) =>
+      // bit_or over no rows is NULL: an empty scan has no present value
+      val m = if (masks.isNullAt(i)) 0 else masks.getInt(i)
+      val any = m & CsvPresent
+      val notBool = m & CsvNotBool
+      val notNum = m & CsvNotNum
       // "" → null BEFORE the cast: reference rule, and an ANSI cast of ""
       // would throw
       def nz = when(col(h) === "", lit(null)).otherwise(col(h))
-      if (any == 1 && notBool == 0) nz.cast(BooleanType).as(h)
-      else if (any == 1 && notNum == 0) nz.cast(DoubleType).as(h)
+      if (any != 0 && notBool == 0) nz.cast(BooleanType).as(h)
+      else if (any != 0 && notNum == 0) nz.cast(DoubleType).as(h)
       else col(h)
     }
     val others = df.columns.filterNot(headers.contains).map(col)

@@ -22,6 +22,16 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("l_comment"), "scan must not read unused columns")
   }
 
+  test("Stats.profile: one unpivot shuffle, no multi-distinct Expand") {
+    val df = graft.operators.Stats.profile(Tables(spark, dir, "orders"))
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("Expand"), p)
+    val hashed = "Exchange hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(p)
+      .map(_.group(1)).toSeq
+    assert(hashed.size == 1 && hashed.head.startsWith("__i#"), p)
+    assert("Exchange SinglePartition".r.findAllIn(p).length == 1, p)
+  }
+
   test("q06/q16: top-k and head fuse to TakeOrderedAndProject / limits") {
     assert(planOf("q06_topk").contains("TakeOrderedAndProject"))
   }

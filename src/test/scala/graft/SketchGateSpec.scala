@@ -294,4 +294,16 @@ class SketchGateSpec extends SparkSpec {
     val msg = Joins.bloomFppWarning(0.9, 0.01, 42L).get
     assert(msg.contains("expectedItems=42") && msg.contains("fpp"))
   }
+
+  test("MinhashCheck: a miss whose doc id is not found counts as genuine") {
+    val exact = Set((1L, 2L), (3L, 4L), (5L, 6L))
+    // (3, 4) re-verified below the bar; (5, 6) has an id that was not found
+    val r = MinhashCheck.Result(10L, exact, Set((1L, 2L)), 0.0, 0.0,
+      Map((3L, 4L) -> 0.5))
+    assert(r.divergent == Set((3L, 4L)))
+    assert(r.idNotFound == Set((5L, 6L)) && r.genuine == Set((5L, 6L)))
+    assert(!r.pass)
+    assert(r.detail.contains("exact(j>=0.8)=3") &&
+      r.detail.contains("missed_genuine_id_not_found=1"), r.detail)
+  }
 }
