@@ -205,8 +205,9 @@ object Queries2 {
   def q49_top_pairs_lsh(s: SparkSession, dir: String): DataFrame = {
     val base = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    Similarity.topPairsLshScaled(QueryFixtures.plantedEmbeddings(base),
-        "vec_id", "e", n = 20, dim = 64)
+    val v = QueryFixtures.plantedEmbeddings(base)
+    val (r, b) = Similarity.scaledLshGeometry(v.count())
+    Similarity.topPairsLsh(v, "vec_id", "e", n = 20, dim = 64, r, b)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
   }
 

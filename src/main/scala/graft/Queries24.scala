@@ -49,24 +49,19 @@ object Queries24 {
     * (oracle parity would still hold — both sides replay the same
     * construction — but the families would stop testing admission).
     */
-  private val idBoundChecked = scala.collection.mutable.Set[String]()
-
   private def requireIdBound(d: DataFrame, dir: String): Unit =
-    this.synchronized {
-      if (!idBoundChecked.contains(dir)) {
-        // RESIDUE bound, not absolute (r15 lesson — the absolute form
-        // failed the sf10 sweep): ScaleUp corpora carry ids k·1e8+base,
-        // and the +1e7/+2e7 plants stay collision-free as long as no
-        // real id's low part reaches 1e7 — plant residues land in
-        // [1e7, 2e7) and [2e7, 3e7), disjoint from real residues
-        // [0, 1e7) and from each other, without crossing into the
-        // k+1·1e8 block.
-        val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
-        require(mx < 10000000L,
-          s"q202 planted-duplicate offsets (+1e7/+2e7) collide with real " +
-            s"doc ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
-        idBoundChecked.add(dir): Unit
-      }
+    Shared.once("q202_id_bound", dir) {
+      // RESIDUE bound, not absolute (r15 lesson — the absolute form
+      // failed the sf10 sweep): ScaleUp corpora carry ids k·1e8+base,
+      // and the +1e7/+2e7 plants stay collision-free as long as no
+      // real id's low part reaches 1e7 — plant residues land in
+      // [1e7, 2e7) and [2e7, 3e7), disjoint from real residues
+      // [0, 1e7) and from each other, without crossing into the
+      // k+1·1e8 block.
+      val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
+      require(mx < 10000000L,
+        s"q202 planted-duplicate offsets (+1e7/+2e7) collide with real " +
+          s"doc ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
     }
 
   private[graft] def ingestParts(s: SparkSession, dir: String)
@@ -98,29 +93,20 @@ object Queries24 {
         .distinct(), Seq("__h"), "left_anti")
       .select(col("id"), col("text"))
 
-  private val builtIngest = scala.collection.mutable.Set[String]()
-
   /** Build-once (per process/sfDir): save a BM25 store from the
     * RESIDENT corpus, run the arriving batch through [[admit]], and
     * append ONLY the admitted docs' postings ([[IndexStore.appendCodes]]
     * `bm25` kind). Returns the store path.
     */
-  private[graft] def ingestStore(s: SparkSession, dir: String): String = {
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_ingest", canonical)
-    this.synchronized {
-      if (!builtIngest.contains(canonical)) BuildTimes.timed("ingest_loop_store") {
-        val (resident, arrivals) = ingestParts(s, dir)
-        IndexStore.saveBm25(s, store,
-          Retrieval.bm25Postings(tok(resident), "id", "toks"), "id")
-        IndexStore.appendCodes(s, store,
-          Retrieval.bm25Postings(tok(admit(resident, arrivals)),
-            "id", "toks"), "id")
-        builtIngest.add(canonical): Unit
-      }
+  private[graft] def ingestStore(s: SparkSession, dir: String): String =
+    Shared.relation("ingest_loop_store", dir) { store =>
+      val (resident, arrivals) = ingestParts(s, dir)
+      IndexStore.saveBm25(s, store,
+        Retrieval.bm25Postings(tok(resident), "id", "toks"), "id")
+      IndexStore.appendCodes(s, store,
+        Retrieval.bm25Postings(tok(admit(resident, arrivals)),
+          "id", "toks"), "id")
     }
-    store
-  }
 
   /** The merged post-ingestion corpus (resident ∪ admitted), tokenized —
     * what a full rebuild would index; the panel and the hard gate both

@@ -55,22 +55,17 @@ object Queries25 {
   /** Planted-family offsets (+3e7/+4e7/+5e7) assume the real id space
     * stays below 1e7 — checked once per (process, dir), the q202
     * discipline. */
-  private val idBoundChecked = scala.collection.mutable.Set[String]()
-
   private def requireIdBound(d: DataFrame, dir: String): Unit =
-    this.synchronized {
-      if (!idBoundChecked.contains(dir)) {
-        // residue bound, not absolute (the q202 r15 sweep lesson):
-        // ScaleUp ids are k·1e8+base; plants stay collision-free while
-        // real residues stay below 1e7 — the +3e7/+4e7/+5e7 bands
-        // [3e7,6e7) are then disjoint from reals and from each other
-        // without crossing into the next 1e8 block
-        val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
-        require(mx < 10000000L,
-          s"q204 planted-duplicate offsets (+3e7/+4e7/+5e7) collide " +
-            s"with real doc ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
-        idBoundChecked.add(dir): Unit
-      }
+    Shared.once("q204_id_bound", dir) {
+      // residue bound, not absolute (the q202 r15 sweep lesson):
+      // ScaleUp ids are k·1e8+base; plants stay collision-free while
+      // real residues stay below 1e7 — the +3e7/+4e7/+5e7 bands
+      // [3e7,6e7) are then disjoint from reals and from each other
+      // without crossing into the next 1e8 block
+      val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
+      require(mx < 10000000L,
+        s"q204 planted-duplicate offsets (+3e7/+4e7/+5e7) collide " +
+          s"with real doc ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
     }
 
   /** Resident corpus (ids ≢ 0 mod 5) and the three sequential arriving

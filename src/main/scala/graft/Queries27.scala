@@ -23,8 +23,6 @@ import graft.operators.{IndexStore, Similarity}
   */
 object Queries27 {
 
-  private val builtIvf2Append = scala.collection.mutable.Set[String]()
-
   /** Build-once (per process/sfDir): train the two-level hierarchy on
     * the RESIDENT corpus, save the store with the resident assignment,
     * then append the arriving batch assigned with the LOADED (frozen)
@@ -33,26 +31,19 @@ object Queries27 {
     */
   private[graft] def ivf2AppendStore(s: SparkSession, dir: String): String = {
     val (_, resident, arriving) = Queries23.appendParts(s, dir)
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val store = TmpDirs.perProcess("graft_ivf2append", canonical)
-    this.synchronized {
-      if (!builtIvf2Append.contains(canonical))
-        BuildTimes.timed("ivf2_append_store") {
-          val n = resident.count()
-          val (side, kSup, kChild) = Queries26.ivf2Geometry(n)
-          val idx = Similarity.IvfIndex2.train(resident, "vec_id", "e",
-            nsup = side, childrenPerSup = side)
-          IndexStore.saveIvf2(s, store, idx,
-            Similarity.ivf2Assign(resident, "vec_id", "e", idx),
-            "vec_id", kSup, kChild)
-          val (loaded, _, _, _) = IndexStore.loadIvf2(s, store)
-          IndexStore.appendCodes(s, store,
-            Similarity.ivf2Assign(arriving, "vec_id", "e", loaded),
-            "vec_id")
-          builtIvf2Append.add(canonical): Unit
-        }
+    Shared.relation("ivf2_append_store", dir) { store =>
+      val n = resident.count()
+      val (side, kSup, kChild) = Queries26.ivf2Geometry(n)
+      val idx = Similarity.IvfIndex2.train(resident, "vec_id", "e",
+        nsup = side, childrenPerSup = side)
+      IndexStore.saveIvf2(s, store, idx,
+        Similarity.ivf2Assign(resident, "vec_id", "e", idx),
+        "vec_id", kSup, kChild)
+      val (loaded, _, _, _) = IndexStore.loadIvf2(s, store)
+      IndexStore.appendCodes(s, store,
+        Similarity.ivf2Assign(arriving, "vec_id", "e", loaded),
+        "vec_id")
     }
-    store
   }
 
   private def servePanel(corpus: DataFrame): DataFrame =
@@ -92,10 +83,6 @@ object Queries27 {
 
   // ------------------------------------------------------ span dedup (q210)
 
-  /** Planted-duplication offset (+6e7) assumes real residues < 1e7 —
-    * the q204 residue discipline (ScaleUp ids are k·1e8+base). */
-  private val spanIdBoundChecked = scala.collection.mutable.Set[String]()
-
   /** The span-dedup corpus: every non-empty document, plus — for ids
     * ≡ 0 mod 17 — a PLANTED doc under id+6e7 whose text is tokens 4..23
     * of the source (a 20-token exact span copy). The copy makes the
@@ -108,14 +95,13 @@ object Queries27 {
     val d = Tables(s, dir, "documents")
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id").as("id"), col("text"))
-    this.synchronized {
-      if (!spanIdBoundChecked.contains(dir)) {
-        val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
-        require(mx < 10000000L,
-          s"q210 planted-duplicate offset (+6e7) collides with real doc " +
-            s"ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
-        spanIdBoundChecked.add(dir): Unit
-      }
+    // planted offset (+6e7) assumes real residues < 1e7 — the q204
+    // residue discipline (ScaleUp ids are k·1e8+base)
+    Shared.once("q210_id_bound", dir) {
+      val mx = d.agg(max(pmod(col("id"), lit(100000000L)))).head.getLong(0)
+      require(mx < 10000000L,
+        s"q210 planted-duplicate offset (+6e7) collides with real doc " +
+          s"ids: max(doc_id % 1e8)=$mx >= 1e7 in $dir")
     }
     val w = graft.functions.TextFunctions.tokensWs(col("text"))
     val planted = d.filter(col("id") % 17 === 0)
@@ -139,8 +125,6 @@ object Queries27 {
 
   // ----------------------------------------- streaming admission (q211)
 
-  private val builtAdmitStream = scala.collection.mutable.Set[String]()
-
   /** Build-once (per process/sfDir): run q204's 3 ingest batches
     * through [[graft.streaming.Streams.nearDupAdmitStream]] — a REAL
     * Structured Streaming query over a file source (one staged parquet
@@ -151,38 +135,30 @@ object Queries27 {
     * APPENDS to it — sharing q206's cross-process artifact would
     * corrupt it).
     */
-  private[graft] def admitStreamDir(s: SparkSession, dir: String): String = {
-    val canonical = new java.io.File(dir).getCanonicalPath
-    val root = TmpDirs.perProcess("graft_admitstream", canonical)
-    this.synchronized {
-      if (!builtAdmitStream.contains(canonical))
-        BuildTimes.timed("admit_stream") {
-          val (resident, batches) = Queries25.ingest2Parts(s, dir)
-          val store = s"$root/store"
-          graft.operators.IndexStore.saveSig(s, store,
-            graft.operators.Dedup.sigRelation(resident, "id", "text",
-              shingleWords = 3, numHashes = 128),
-            "id", shingleWords = 3, numHashes = 128)
-          val watched = s"$root/in"
-          new java.io.File(watched).mkdirs(): Unit
-          val outDir = s"$root/status"
-          val src = s.readStream.schema("id LONG, text STRING")
-            .parquet(watched)
-          val q = graft.streaming.Streams.nearDupAdmitStream(
-            src, store, "id", "text", threshold = 0.5) { (df, bid) =>
-            df.withColumn("batch", lit(bid.toInt))
-              .write.mode("append").parquet(outDir)
-          }
-          try batches.foreach { b =>
-            b.select(col("id"), col("text"))
-              .coalesce(1).write.mode("append").parquet(watched)
-            q.processAllAvailable()
-          } finally q.stop()
-          builtAdmitStream.add(canonical): Unit
-        }
+  private[graft] def admitStreamDir(s: SparkSession, dir: String): String =
+    Shared.relation("admit_stream", dir) { root =>
+      val (resident, batches) = Queries25.ingest2Parts(s, dir)
+      val store = s"$root/store"
+      graft.operators.IndexStore.saveSig(s, store,
+        graft.operators.Dedup.sigRelation(resident, "id", "text",
+          shingleWords = 3, numHashes = 128),
+        "id", shingleWords = 3, numHashes = 128)
+      val watched = s"$root/in"
+      new java.io.File(watched).mkdirs(): Unit
+      val outDir = s"$root/status"
+      val src = s.readStream.schema("id LONG, text STRING")
+        .parquet(watched)
+      val q = graft.streaming.Streams.nearDupAdmitStream(
+        src, store, "id", "text", threshold = 0.5) { (df, bid) =>
+        df.withColumn("batch", lit(bid.toInt))
+          .write.mode("append").parquet(outDir)
+      }
+      try batches.foreach { b =>
+        b.select(col("id"), col("text"))
+          .coalesce(1).write.mode("append").parquet(watched)
+        q.processAllAvailable()
+      } finally q.stop()
     }
-    root
-  }
 
   /** The STREAMING near-dup admission loop's verdicts — FULLY ORACLED
     * by q204's DuckDB CTE verbatim (the exhaustive sequential

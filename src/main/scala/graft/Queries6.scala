@@ -21,7 +21,7 @@ object Queries6 {
 
   /** semantic dedup over the embedding space, through the SCALE path:
     * hyperplane-banded candidate pairs with exact round(cos,4) >= 0.9
-    * rescore ([[Similarity.cosinePairsLshAuto]] — NO CartesianProduct in
+    * rescore ([[Similarity.cosinePairsLsh]] — NO CartesianProduct in
     * the plan) → connected components → keep the min-id representative
     * per cluster. The raw testdata embeddings contain no semantic near-dups
     * (max background pair cos ≈ 0.51 at every SF — measured round 6), so
@@ -44,16 +44,17 @@ object Queries6 {
     // 2^12 band values keep buckets ≤16 through sf1 (22k vectors), and
     // 12 bands hold the planted-pair (cos ≈ 0.9967, p ≈ 0.974) miss
     // rate at ~1.5e-7. Round 8: the knee routing is CODE, not scaladoc
-    // — the auto dispatcher keeps 12×12 while occupancy n/2^12 ≤ 16
+    // — autoLshGeometry keeps 12×12 while occupancy n/2^12 ≤ 16
     // (every oracle SF: 0.13 → 5.4 at sf1, so the oracled plan never
     // changes) and switches to scaledLshGeometry past it, carrying the
     // hand geometry's own 1.5e-7 design miss across the switch. The
     // cap is the MEASURED crossover on decorrelated rehearsal data:
     // scaled wins 13.3→11.1 s at occ 18 (sf3) and 141→48 s at occ 54
     // (sf10); hand wins 1.9 vs 5.3 s at occ 0.5 (sf0.1).
-    val pairs = Similarity.cosinePairsLshAuto(v, "vec_id", "e", 0.9,
-      dim = 64, planesPerBand = 12, bands = 12, targetCos = 0.9967,
-      maxMiss = 1.5e-7)
+    val (r, b, _) = Similarity.autoLshGeometry(v.count(), 12, 12, 0.9967,
+      1.5e-7)
+    val pairs = Similarity.cosinePairsLsh(v, "vec_id", "e", 0.9, dim = 64,
+      r, b)
     Dedup.connectedComponents(v.select(col("vec_id")), "vec_id",
         pairs, "id_a", "id_b")
       .select(col("id").as("vec_id"), col("comp"),

@@ -165,7 +165,8 @@ object Similarity {
       val seen = df.limit((capped + 1).toInt).count()
       if (seen > capped) throw new IllegalArgumentException(
         s"topPairs is exact all-pairs (O(n^2) dot products) and its input " +
-          s"exceeds $capped rows. Use topPairsLshScaled for the " +
+          s"exceeds $capped rows. Use topPairsLsh with " +
+          s"scaledLshGeometry(count) for the " +
           s"high-similarity (near-dup) regime at this scale, bound the " +
           s"corpus (per-label / per-partition blocks), or raise maxRows " +
           s"(0 disables the guard) if the quadratic cost is intended.")
@@ -185,8 +186,9 @@ object Similarity {
   }
 
   /** LSH-gated global top-n pairs with EXACT rescoring — the 100 TB path
-    * for the high-similarity (near-dup) regime. The `planes`-bit
-    * hyperplane signature is split into `bands` sub-keys; pairs sharing
+    * for the high-similarity (near-dup) regime. The hyperplane
+    * signature is split into `bands` sub-keys of `planesPerBand` bits
+    * each; pairs sharing
     * any band self-join per (band, value) bucket — never all-pairs — and
     * every candidate is rescored with the exact codegen cosine before the
     * global TakeOrdered(n).
@@ -203,15 +205,18 @@ object Similarity {
     * pair row (the cross-join-payload trap). Candidates are deduped as id
     * pairs, then the two vectors are joined back for ONE exact rescore
     * per candidate, and the result is a TakeOrdered(n).
+    *
+    * The fixed default crosses its quadratic knee as the corpus grows
+    * (see [[cosinePairsLsh]]): at scale pass [[scaledLshGeometry]] of a
+    * corpus count, or [[autoLshGeometry]] to keep a hand geometry up to
+    * its occupancy knee.
     */
   def topPairsLsh(
       df: DataFrame, idCol: String, vecCol: String, n: Int, dim: Int,
-      planes: Int = 63, bands: Int = 9): DataFrame = {
-    require(planes % bands == 0, s"bands ($bands) must divide planes ($planes)")
-    rescoredBandPairs(df, idCol, vecCol, dim, planes / bands, bands)
+      planesPerBand: Int = 7, bands: Int = 9): DataFrame =
+    rescoredBandPairs(df, idCol, vecCol, dim, planesPerBand, bands)
       .orderBy(col("cos").desc, col("id_a").asc, col("id_b").asc)
       .limit(n)
-  }
 
   /** Corpus-scaled LSH geometry — the rule the 10×/30× rehearsals forced
     * (PLANS.md): a FIXED band width scales quadratically (bucket
@@ -257,53 +262,6 @@ object Similarity {
     (r, b)
   }
 
-  /** [[topPairsLsh]] with [[scaledLshGeometry]] derived from a count of
-    * the input — the form to reach for when the corpus size isn't known
-    * up front. The count is one narrow job over `df`; `localCheckpoint()`
-    * first if the input plan is expensive (the pair machinery evaluates
-    * it again for signatures).
-    */
-  def topPairsLshScaled(
-      df: DataFrame, idCol: String, vecCol: String, n: Int, dim: Int,
-      targetCos: Double = 0.99, maxMiss: Double = 0.01,
-      targetBucket: Int = 16, maxPlanesPerBand: Int = 20): DataFrame = {
-    val (r, b) =
-      scaledLshGeometry(df.count(), targetCos, maxMiss, targetBucket,
-        maxPlanesPerBand)
-    rescoredBandPairs(df, idCol, vecCol, dim, r, b)
-      .orderBy(col("cos").desc, col("id_a").asc, col("id_b").asc)
-      .limit(n)
-  }
-
-  /** [[topPairsLsh]] with the same knee-aware geometry dispatch as
-    * [[cosinePairsLshAuto]]: a hand band geometry is honored only while
-    * its expected occupancy `n / 2^planesPerBand` stays at or under
-    * `occupancyCap` ([[autoLshGeometry]] — measured crossover, see its
-    * scaladoc); past it [[scaledLshGeometry]] takes over and the switch
-    * is logged. `n` comes from `knownCount` or one narrow count job.
-    */
-  def topPairsLshAuto(
-      df: DataFrame, idCol: String, vecCol: String, n: Int, dim: Int,
-      planesPerBand: Int, bands: Int,
-      targetCos: Double = 0.99, maxMiss: Double = 0.01,
-      occupancyCap: Long = 16, targetBucket: Int = 16,
-      maxPlanesPerBand: Int = 20,
-      knownCount: Option[Long] = None): DataFrame = {
-    val rows = knownCount.getOrElse(df.count())
-    val (r, b, switched) = autoLshGeometry(rows, planesPerBand, bands,
-      targetCos, maxMiss, occupancyCap, targetBucket, maxPlanesPerBand)
-    if (switched) log.warn(
-      s"topPairsLshAuto: n=$rows exceeds hand geometry " +
-        s"${planesPerBand}x$bands occupancy cap (n/2^$planesPerBand > " +
-        s"$occupancyCap/bucket) — switching to scaled geometry ${r}x$b")
-    else log.info(
-      s"topPairsLshAuto: n=$rows within occupancy cap — keeping hand " +
-        s"geometry ${planesPerBand}x$bands")
-    rescoredBandPairs(df, idCol, vecCol, dim, r, b)
-      .orderBy(col("cos").desc, col("id_a").asc, col("id_b").asc)
-      .limit(n)
-  }
-
   /** LSH-gated threshold pairs with EXACT rescoring — the 100 TB default
     * for semantic dedup. Same banded candidate generation as
     * [[topPairsLsh]] (payload-free band self-join, one exact rescore per
@@ -323,6 +281,8 @@ object Similarity {
     * `planesPerBand ≈ log2(n / 16)` (keeps expected bucket size ~16) and
     * raise `bands` to keep (1 − p^r)^b small for the similarity of the
     * pairs you must not miss; candidate work then stays ~linear in n.
+    * [[scaledLshGeometry]] derives that geometry from a corpus count;
+    * [[autoLshGeometry]] keeps a hand geometry until its occupancy knee.
     */
   def cosinePairsLsh(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
@@ -331,48 +291,21 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
       .filter(col("cos") >= threshold)
 
-  /** [[cosinePairsLsh]] with [[scaledLshGeometry]] derived from a count
-    * of the input — for corpora whose size outruns a hand-picked band
-    * width (the 30× rehearsal in PLANS.md: a fixed width crosses its
-    * quadratic knee once occupancy ~n/2^r grows).
+  /** Knee-aware geometry routing for the LSH pair operators: keep the
+    * supplied hand geometry while its expected bucket occupancy
+    * `n / 2^planesPerBand` stays at or under `occupancyCap`; switch to
+    * [[scaledLshGeometry]] past it, and log the choice either way — a
+    * fixed width crosses its quadratic knee silently, and at 100 TB
+    * nobody re-reads a scaladoc before the job dies. Returns
+    * `(planesPerBand, bands, switched)`.
     *
-    * `targetCos` here is the similarity of the pairs that MUST be
-    * recalled (e.g. the known near-dup similarity of a planted or
-    * measured dup population) — NOT the rescore `threshold`, which can
-    * sit well below it; the default `maxMiss` 1e-8 makes the expected
-    * number of missed must-recall pairs negligible even over millions
-    * of dup pairs. The count is one narrow job over `df`;
-    * `localCheckpoint()` first if the input plan is expensive.
-    *
-    * MEASURED TRADEOFF (round 8, decorrelated rehearsal data): a tight
-    * `maxMiss` needs ~1.5× the bands of a hand-tuned geometry, so the
-    * hand form wins while its buckets stay at or under design
-    * occupancy (q92 12×12: 1.9 s vs 5.3 s cold at 2.2k vectors) — but
-    * the crossover arrives WITH the design occupancy, not decades past
-    * it: at occupancy ~18 the scaled form already wins 13.3 → 11.1 s
-    * (72.6k vectors) and at occupancy 54 it wins 141 → 48 s (220k).
-    * (The round-7 version of this note claimed the hand form held to
-    * 1.8M vectors; that was measured on the correlated-replica-noise
-    * corpus the sf1 oracle gate invalidated.) Prefer
-    * [[cosinePairsLshAuto]], which encodes this crossover as a
-    * dispatch rule instead of a doc.
-    */
-  def cosinePairsLshScaled(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      dim: Int, targetCos: Double, maxMiss: Double = 1e-8,
-      targetBucket: Int = 16, maxPlanesPerBand: Int = 20): DataFrame = {
-    val (r, b) =
-      scaledLshGeometry(df.count(), targetCos, maxMiss, targetBucket,
-        maxPlanesPerBand)
-    rescoredBandPairs(df, idCol, vecCol, dim, r, b)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** Geometry routing for [[cosinePairsLshAuto]]: keep the supplied hand
-    * geometry while its expected bucket occupancy `n / 2^planesPerBand`
-    * stays at or under `occupancyCap`; switch to [[scaledLshGeometry]]
-    * past it. Returns `(planesPerBand, bands, switched)`.
+    * `targetCos`/`maxMiss` describe the pairs that MUST be recalled if
+    * the scaled branch is taken — the similarity of the near-dup
+    * population, NOT the rescore threshold, which can sit well below it;
+    * pass the hand geometry's own design miss rate for continuity
+    * across the switch. `n` is a corpus count (one narrow job;
+    * `localCheckpoint()` the input first if its plan is expensive — the
+    * pair machinery evaluates it again for signatures).
     *
     * The default cap 16 is the MEASURED round-8 crossover on
     * decorrelated rehearsal data (q92, 12×12 hand geometry, dim 64):
@@ -395,55 +328,20 @@ object Similarity {
       "planesPerBand must fit a long")
     require(bands > 0, "bands must be positive")
     require(occupancyCap > 0, "occupancyCap must be positive")
-    if (n.toDouble / math.pow(2.0, planesPerBand) <= occupancyCap.toDouble)
+    if (n.toDouble / math.pow(2.0, planesPerBand) <= occupancyCap.toDouble) {
+      log.info(s"autoLshGeometry: n=$n within occupancy cap — keeping " +
+        s"hand geometry ${planesPerBand}x$bands")
       (planesPerBand, bands, false)
-    else {
+    } else {
       val (r, b) =
         scaledLshGeometry(n, targetCos, maxMiss, targetBucket,
           maxPlanesPerBand)
-      (r, b, true)
-    }
-  }
-
-  /** [[cosinePairsLsh]] with knee-aware geometry dispatch — the form to
-    * deploy when the corpus may outgrow a hand-tuned band width. A hand
-    * geometry measured at deployment scale beats the analytic one (q92:
-    * 12×12 won at every rehearsed scale up to its knee — see
-    * [[cosinePairsLshScaled]]), but a fixed width crosses its quadratic
-    * knee silently once occupancy `n/2^r` outruns it, and at 100 TB
-    * nobody re-reads a scaladoc before the job dies — so the routing is
-    * code, not advice: the hand geometry is used only while
-    * `n / 2^planesPerBand ≤ occupancyCap` ([[autoLshGeometry]]), and the
-    * choice is logged either way.
-    *
-    * `targetCos`/`maxMiss` describe the pairs that MUST be recalled if
-    * the scaled branch is taken (see [[cosinePairsLshScaled]]) — pass
-    * the hand geometry's own design miss rate for continuity across the
-    * switch. `n` is taken from `knownCount` when the caller already has
-    * it; otherwise one narrow count job over `df` (`localCheckpoint()`
-    * first if the input plan is expensive — the pair machinery evaluates
-    * it again for signatures).
-    */
-  def cosinePairsLshAuto(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      dim: Int, planesPerBand: Int, bands: Int, targetCos: Double,
-      maxMiss: Double = 1e-8, occupancyCap: Long = 16,
-      targetBucket: Int = 16, maxPlanesPerBand: Int = 20,
-      knownCount: Option[Long] = None): DataFrame = {
-    val n = knownCount.getOrElse(df.count())
-    val (r, b, switched) = autoLshGeometry(n, planesPerBand, bands,
-      targetCos, maxMiss, occupancyCap, targetBucket, maxPlanesPerBand)
-    if (switched) log.warn(
-      s"cosinePairsLshAuto: n=$n exceeds hand geometry " +
+      log.warn(s"autoLshGeometry: n=$n exceeds hand geometry " +
         s"${planesPerBand}x$bands occupancy cap (n/2^$planesPerBand > " +
         s"$occupancyCap/bucket) — switching to scaled geometry ${r}x$b " +
         s"(targetCos=$targetCos, maxMiss=$maxMiss)")
-    else log.info(
-      s"cosinePairsLshAuto: n=$n within occupancy cap — keeping hand " +
-        s"geometry ${planesPerBand}x$bands")
-    rescoredBandPairs(df, idCol, vecCol, dim, r, b)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
-      .filter(col("cos") >= threshold)
+      (r, b, true)
+    }
   }
 
   /** Shared LSH-band pair machinery: banded candidate self-join carrying

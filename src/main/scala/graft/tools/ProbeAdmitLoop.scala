@@ -97,11 +97,7 @@ object ProbeAdmitLoop {
       println(f"""{"mem_total_s":$memS%.1f,"verdicts_equal":$eq}""")
       require(eq, "store-seeded verdicts != in-memory verdicts")
     }
-    def deleteRec(f: java.io.File): Unit = {
-      val ch = f.listFiles(); if (ch != null) ch.foreach(deleteRec)
-      f.delete(): Unit
-    }
-    deleteRec(new java.io.File(store))
+    graft.TmpDirs.deleteRec(new java.io.File(store))
     spark.stop()
   }
 }

@@ -75,11 +75,7 @@ object ProbeAdmitParts {
       Dedup.nearDupAdmitLoopFromStore(spark, store, Seq(batch), "id",
         "text", threshold = 0.5).head.count()
     }
-    def deleteRec(f: java.io.File): Unit = {
-      val ch = f.listFiles(); if (ch != null) ch.foreach(deleteRec)
-      f.delete(): Unit
-    }
-    deleteRec(new java.io.File(store))
+    graft.TmpDirs.deleteRec(new java.io.File(store))
     spark.stop()
   }
 }

@@ -77,11 +77,7 @@ object ProbeIvf2 {
         f""""frac":${kSup * kChild / 4096.0}%.4f,"serve_s":$tServe%.1f,""" +
         f""""recall_at5":$recall%.3f}""")
     }
-    def deleteRec(f: java.io.File): Unit = {
-      val ch = f.listFiles(); if (ch != null) ch.foreach(deleteRec)
-      f.delete(): Unit
-    }
-    deleteRec(new java.io.File(store))
+    graft.TmpDirs.deleteRec(new java.io.File(store))
     spark.stop()
   }
 }

@@ -36,12 +36,13 @@ object ProbeScaledLsh {
     val v = graft.QueryFixtures.plantedEmbeddings(base).localCheckpoint()
     val n = v.count()
     val occupancy = n.toDouble / math.pow(2.0, 12)
-    val branch = if (occupancy <= 16) "hand 12x12" else "scaled"
     val t0 = System.nanoTime()
     // the exact q92 pair stage (q92_semantic_dedup passes these params)
-    val pairs = Similarity.cosinePairsLshAuto(v, "vec_id", "e", 0.9,
-        dim = 64, planesPerBand = 12, bands = 12, targetCos = 0.9967,
-        maxMiss = 1.5e-7, knownCount = Some(n))
+    val (r, b, switched) =
+      Similarity.autoLshGeometry(n, 12, 12, 0.9967, 1.5e-7)
+    val branch = if (switched) s"scaled ${r}x$b" else "hand 12x12"
+    val pairs = Similarity.cosinePairsLsh(v, "vec_id", "e", 0.9, dim = 64,
+        r, b)
       .localCheckpoint()
     val nPairs = pairs.count()
     val tPairs = (System.nanoTime() - t0) / 1e9

@@ -72,7 +72,7 @@ class Round20OpsSpec extends SparkSpec {
     val first = graft.CoPurchase.pairCounts(spark, dir)
     val n1 = first.count()
     assert(n1 > 0)
-    val out = graft.TmpDirs.perProcess("graft_copurchase",
+    val out = graft.TmpDirs.perProcess("graft_copurchase_rel",
       new java.io.File(dir).getCanonicalPath)
     val mtimes = new java.io.File(out).listFiles().map(_.lastModified).sorted
     // second call must NOT rebuild — file mtimes stay identical — and

@@ -283,7 +283,7 @@ class Round7OpsSpec extends SparkSpec {
     assert(rs == rs.sorted)
   }
 
-  test("cosinePairsLshScaled finds exactly the threshold pairs (planted)") {
+  test("cosinePairsLsh + scaledLshGeometry find exactly the threshold pairs (planted)") {
     import graft.operators.Similarity
     val dim = 16
     val rnd = new java.util.SplittableRandom(11L)
@@ -294,8 +294,10 @@ class Round7OpsSpec extends SparkSpec {
       (id + 1000L, v.map(_ + 0.001)) }
     val df = (base ++ planted).toDF("id", "vec")
       .select(col("id"), col("vec").cast("array<double>").as("vec"))
-    val got = Similarity.cosinePairsLshScaled(df, "id", "vec",
-        threshold = 0.95, dim = dim, targetCos = 0.99)
+    val (bits, nb) = Similarity.scaledLshGeometry(df.count(),
+      targetCos = 0.99, maxMiss = 1e-8)
+    val got = Similarity.cosinePairsLsh(df, "id", "vec",
+        threshold = 0.95, dim = dim, bits, nb)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Similarity.cosinePairs(df, "id", "vec", threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.sources.{CsvOptions, CsvReader}
 
-/** Round-8 verdict items: knee-aware LSH dispatch, scaled-geometry
+/** Round-8 verdict items: knee-aware LSH geometry, scaled-geometry
   * parameter plumbing (targetBucket / maxPlanesPerBand), the exact
   * topPairs row-count guard, and readUrl credential modes.
   */
@@ -64,7 +64,7 @@ class Round8OpsSpec extends SparkSpec {
       .select(col("id"), col("vec").cast("array<double>").as("vec"))
   }
 
-  test("cosinePairsLshAuto matches exact pairs on BOTH dispatch branches") {
+  test("cosinePairsLsh + autoLshGeometry match exact pairs on BOTH dispatch branches") {
     // threshold 0.98 keeps only the planted twins (cos ≈ 0.999999) in
     // the exact set — the 19-bit scaled branch's per-pair miss is ~0
     // there but a few percent for a chance background pair near 0.95
@@ -75,48 +75,53 @@ class Round8OpsSpec extends SparkSpec {
     assert(exact.nonEmpty, "fixture must plant qualifying pairs")
     // hand branch: 220 vectors, occupancy 220/2^12 ≈ 0.05 <= the
     // dispatcher's measured occupancyCap default of 16
-    val hand = Similarity.cosinePairsLshAuto(df, "id", "vec", 0.98,
-        dim = dim, planesPerBand = 12, bands = 12, targetCos = 0.99)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairs(n: Long) = {
+      val (bits, nb, _) = Similarity.autoLshGeometry(n, 12, 12,
+        targetCos = 0.99)
+      Similarity.cosinePairsLsh(df, "id", "vec", 0.98, dim = dim, bits, nb)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    val hand = pairs(df.count())
     assert(hand == exact, s"hand branch missed=${(exact -- hand).size}")
-    // scaled branch forced via knownCount: the claimed corpus size, not
-    // the physical one, drives the width (log2(5M/16) ≈ 18.3 → 19
+    // scaled branch forced by a claimed count: the claimed corpus size,
+    // not the physical one, drives the width (log2(5M/16) ≈ 18.3 → 19
     // bits); planted twins still band-collide because band keys hash
     // the actual signatures
-    val scaled = Similarity.cosinePairsLshAuto(df, "id", "vec", 0.98,
-        dim = dim, planesPerBand = 12, bands = 12, targetCos = 0.99,
-        knownCount = Some(5000000L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val scaled = pairs(5000000L)
     assert(scaled == exact, s"scaled branch missed=${(exact -- scaled).size}")
   }
 
-  test("cosinePairsLshScaled plumbs targetBucket/maxPlanesPerBand") {
+  test("cosinePairsLsh + scaledLshGeometry plumb targetBucket/maxPlanesPerBand") {
     val df = plantedVecs()
     // tiny corpus: geometry clamps to the r=7 floor either way; the
     // point is the parameters reach the geometry without error
-    val got = Similarity.cosinePairsLshScaled(df, "id", "vec", 0.95,
-        dim = 16, targetCos = 0.99, targetBucket = 8, maxPlanesPerBand = 10)
+    val (bits, nb) = Similarity.scaledLshGeometry(df.count(),
+      targetCos = 0.99, maxMiss = 1e-8, targetBucket = 8,
+      maxPlanesPerBand = 10)
+    val got = Similarity.cosinePairsLsh(df, "id", "vec", 0.95, dim = 16,
+        bits, nb)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Similarity.cosinePairs(df, "id", "vec", 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == exact)
   }
 
-  test("topPairsLshAuto recovers planted top pairs on both branches") {
+  test("topPairsLsh + autoLshGeometry recover planted top pairs on both branches") {
     val dim = 16
     val df = plantedVecs(dim)
     val planted = Similarity.cosinePairs(df, "id", "vec", threshold = 0.98)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(planted.size >= 20)
-    def top20(knownCount: Option[Long]) =
-      Similarity.topPairsLshAuto(df, "id", "vec", n = 20, dim = dim,
-          planesPerBand = 12, bands = 12, targetCos = 0.99,
-          knownCount = knownCount)
+    def top20(n: Long) = {
+      val (bits, nb, _) = Similarity.autoLshGeometry(n, 12, 12,
+        targetCos = 0.99, maxMiss = 0.01)
+      Similarity.topPairsLsh(df, "id", "vec", n = 20, dim = dim, bits, nb)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     // hand branch (220 vectors) and forced-scaled branch agree: the
     // global top 20 are all planted twins (cos ≈ 0.999999)
-    val hand = top20(None)
-    val scaled = top20(Some(5000000L))
+    val hand = top20(df.count())
+    val scaled = top20(5000000L)
     assert(hand.subsetOf(planted) && hand.size == 20)
     assert(scaled == hand)
   }
@@ -131,7 +136,7 @@ class Round8OpsSpec extends SparkSpec {
     val err = intercept[IllegalArgumentException] {
       Similarity.topPairs(df, "id", "vec", n = 5, maxRows = 10L).collect()
     }
-    assert(err.getMessage.contains("topPairsLshScaled"),
+    assert(err.getMessage.contains("topPairsLsh with scaledLshGeometry"),
       "the error must route the caller to the scale path")
     // under the cap and with the guard disabled both still work
     assert(Similarity.topPairs(df, "id", "vec", 5, maxRows = 50L)

@@ -29,14 +29,9 @@ object SparkSpec {
     .newKeySet[java.io.File]()
   private lazy val hook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      dirs.forEach(deleteRec(_))
+      dirs.forEach(TmpDirs.deleteRec(_))
     }))
   private[graft] def cleanupAtExit(f: java.io.File): Unit = {
     hook; dirs.add(f): Unit
-  }
-  private def deleteRec(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRec)
-    f.delete(): Unit
   }
 }
